@@ -1,6 +1,5 @@
-"""Write-once materialized store for the MinHash/LSH band index —
-the third derived-dataset store (after ``borders_store`` and
-``crawl_store``), landing VERDICT r10 next-4.
+"""Write-once store for the MinHash/LSH band index (protocol:
+``datapipe/store.py``), landing VERDICT r10 next-4.
 
 Eight registered queries each re-run the SAME corpus-linear MinHash
 pass before doing any of their own work: shingle-explode every
@@ -15,9 +14,7 @@ At 100 TB you hash and band the corpus ONCE and land the index as a
 columnar table — exactly what ``dedup.save_band_index``
 (`dedup.py:513`) already provides for the incremental-ingestion path;
 this module gives the same artifact a write-once, content-keyed store
-so every batch consumer starts from a scan too. The reference's
-analogue is ``pycart/border_util.py:51,77`` (derive-per-call — right
-for an 852-line single-node library, wrong at cluster scale).
+so every batch consumer starts from a scan too.
 
 Key design point — the stored rows are the PRE-CAP band index:
 
@@ -34,75 +31,35 @@ Key design point — the stored rows are the PRE-CAP band index:
   exactly. (``save_band_index`` caps at build because its consumer,
   incremental probing, always probes the full corpus.)
 
-Store contract (same protocol as ``crawl_store``):
-
-- one parquet table per (layout version, producing-code hash, corpus
-  fingerprint, variant), variant in {``documents``, ``crawl_html``};
-  the crawl_html variant's key also folds in the crawl store's own
-  producing-code hash, since the banded text is its extraction's
-  output.
-- ATOMIC, race-safe builds: writers build into a uuid tmp dir and
-  ``os.rename`` into place; a lost race cleans its tmp dir and reads
-  the winner.
-- Correctness contract: ``candidate_pairs(...)`` returns EXACTLY the
-  rows ``dedup.lsh_candidate_pairs`` returns on the same input
-  (pinned by tests/test_band_store.py), so every consumer's oracle is
-  unchanged.
-
-Set ``SPARK_GRAFT_BAND_STORE_OFF=1`` to bypass the store (fresh
-per-query hashing — the A side of docs/AB_BANDS_r11.md);
-``SPARK_GRAFT_BAND_STORE`` overrides the store root (default
-``<repo>/out/band_store``).
+One table per variant, ``documents`` or ``crawl_html``, keyed by the
+``documents`` fingerprint; the crawl_html variant's key also folds in
+the crawl store's producing-code hash, since the banded text is its
+extraction's output. ``candidate_pairs(...)`` returns EXACTLY the rows
+``dedup.lsh_candidate_pairs`` returns on the same input (pinned by
+tests/test_band_store.py), so every consumer's oracle is unchanged.
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecmm428_pycart_spark.datapipe import crawl_store, dedup
+from ecmm428_pycart_spark.datapipe import crawl_store, dedup, store
 from ecmm428_pycart_spark.session import load_table
-
-_LAYOUT_VERSION = "v1"
-_ALGO_MEMO: list[str] = []
 
 _VARIANTS = ("documents", "crawl_html")
 
 
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_BAND_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "band_store")
-
-
-def _algo_version() -> str:
-    """Hash of the SOURCE of everything that determines the stored
-    rows: the shingle/tokenize helpers, the MinHash and banding
-    kernels, their constants, and this module's builder. Any edit to
-    the hashing pipeline changes the key, so stale entries can never
-    serve silently (the ADVICE r9 staleness class). ``text.tokens`` is
-    included explicitly: ``shingle_set`` calls it, so a tokenizer edit
-    changes the stored band keys (ADVICE r11 — without this the
-    documents variant would serve stale; crawl_html was only
-    incidentally protected via the ``-c{crawl_algo}`` fold)."""
-    if not _ALGO_MEMO:
-        src = "\n".join(_algo_sources())
-        _ALGO_MEMO.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO[0]
-
-
 def _algo_sources() -> list[str]:
-    """The source list `_algo_version` hashes (split out so tests can
-    pin that every upstream dependency participates in the key)."""
+    """Everything that determines the stored rows: the shingle/tokenize
+    helpers, the MinHash and banding kernels, their constants, and this
+    module's builder. ``text.tokens`` is included explicitly:
+    ``shingle_set`` calls it, so a tokenizer edit changes the stored
+    band keys (ADVICE r11 — without it the documents variant would
+    serve stale; crawl_html was only incidentally protected via the
+    crawl store's hash)."""
     from ecmm428_pycart_spark.datapipe.text import tokens
 
     return [
@@ -137,15 +94,23 @@ def _fresh_bands(spark: SparkSession, sf_dir: str,
         dedup.minhash_signature(_base_corpus(spark, sf_dir, variant)))
 
 
+def _doc_clustered(variant: str) -> store.Write:
+    return lambda spark, sf_dir, path: store.write_clustered(
+        _fresh_bands(spark, sf_dir, variant), path,
+        crawl_store._layout_files(spark, sf_dir), "doc_id")
+
+
+_TABLES = {
+    v: store.declare(name=v, store="band", suffix=f"bands_{v}",
+                     sources=_algo_sources,
+                     fingerprint=crawl_store._fingerprint,
+                     write=_doc_clustered(v),
+                     reads=crawl_store.HTML if v == "crawl_html" else None)
+    for v in _VARIANTS}
+
+
 def _entry_key(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    algo = _algo_version()
-    if variant == "crawl_html":
-        # The banded text is the crawl extraction's OUTPUT: fold in
-        # that producing code's hash too, so an extractor edit
-        # invalidates this table as well as the crawl store's.
-        algo = f"{algo}-c{crawl_store._algo_version()}"
-    return (f"{_LAYOUT_VERSION}_{algo}"
-            f"_{crawl_store._fingerprint(spark, sf_dir)}_bands_{variant}")
+    return _TABLES[variant].entry(spark, sf_dir)
 
 
 def band_index(spark: SparkSession, sf_dir: str,
@@ -155,37 +120,9 @@ def band_index(spark: SparkSession, sf_dir: str,
     if variant not in _VARIANTS:
         raise ValueError(f"unknown band-store variant {variant!r}; "
                          f"expected one of {_VARIANTS}")
-    if _off():
+    if store.off():
         return _fresh_bands(spark, sf_dir, variant)
-    final = os.path.join(_store_root(), _entry_key(spark, sf_dir, variant))
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (_fresh_bands(spark, sf_dir, variant)
-             # doc_id-clustered layout, file count scaled with corpus
-             # size (the local stand-in for bucketBy(doc_id) into a
-             # catalog table at cluster scale)
-             .repartition(crawl_store._layout_files(spark, sf_dir),
-                          "doc_id")
-             .sortWithinPartitions("doc_id")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's table; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (ADVICE r11)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
-
-
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_BAND_STORE_OFF") == "1"
+    return spark.read.parquet(store.served(spark, sf_dir, _TABLES[variant]))
 
 
 def candidate_pairs(spark: SparkSession, sf_dir: str,
@@ -213,7 +150,7 @@ def candidate_pairs(spark: SparkSession, sf_dir: str,
     consumer must call ``dedup.lsh_candidate_pairs(transformed)``
     directly instead (ADVICE r11).
     """
-    if _off():
+    if store.off():
         base = docs if docs is not None else _base_corpus(
             spark, sf_dir, variant)
         return dedup.lsh_candidate_pairs(

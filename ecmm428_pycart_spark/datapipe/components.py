@@ -67,7 +67,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
 
     Set ``SPARK_GRAFT_CC_LOCAL_MAX_EDGES=0`` to force the distributed
     loop at any size; ``SPARK_GRAFT_CC_LEGACY=1`` runs the pre-r12
-    always-distributed loop (the A side of tools/ab_components.py).
+    always-distributed loop (the A side of docs/AB_COMPONENTS_r12.md).
     Results are identical on every path."""
     if os.environ.get("SPARK_GRAFT_CC_LEGACY") == "1":
         return _legacy_connected_components(edges, src, dst, max_iter)

@@ -1,5 +1,5 @@
-"""Write-once materialized store for the crawl family's shared
-extraction passes.
+"""Write-once store for the crawl family's shared extraction passes
+(protocol: ``datapipe/store.py``).
 
 Round-10 performance program (VERDICT r9 next-3 — the borders-store
 move, applied again): the crawl-macro queries each re-run the SAME
@@ -16,92 +16,61 @@ their own work:
   mixed-media decode (``multimodal.synth_warc_media_payload`` →
   ``multimodal.warc_media_extract``).
 
-The reference's analogue is the same one it has for borders
-(``pycart/border_util.py:51,77`` — derive once per call): right for an
-852-line single-node library, wrong at cluster scale. At 100 TB you
-run the CPU-linear decode ONCE, land the extracted corpus as a
-doc_id-clustered columnar table, and every downstream job (dedup,
-graph, retrieval, packing) starts from a scan — this is exactly what
+At 100 TB you run the CPU-linear decode ONCE and land the extracted
+corpus as a doc_id-clustered columnar table — exactly what
 Common-Crawl-scale pipelines do (WARC → WET/WAT derived tables). This
-module is that move, with the same contract as
-``datapipe/borders_store.py``:
+module declares three such tables: ``html`` (doc_id, source, text,
+n_links, n_records), ``links`` (doc_id, src_host, dst_host — one row
+per extracted href) and ``media`` (doc_id, source, media_type, n_units,
+sum_val, n_records, n_responses), each built independently and at most
+once, hashed + sorted by ``doc_id`` with a corpus-scaled file count.
 
-- three derived tables per (layout version, producing-code hash,
-  documents fingerprint): ``html`` (doc_id, source, text, n_links,
-  n_records), ``links`` (doc_id, src_host, dst_host — one row per
-  extracted href), ``media`` (doc_id, source, media_type, n_units,
-  sum_val, n_records, n_responses). Each is built independently and
-  at most once, repartitioned + sorted by ``doc_id`` (the local
-  stand-in for ``bucketBy(doc_id)`` into a catalog table).
-- ATOMIC, race-safe builds: writers build into a uuid tmp dir and
-  ``os.rename`` into place; a lost race cleans its tmp dir and reads
-  the winner.
-- Correctness contract: each table holds EXACTLY the fresh
-  extraction's rows (pinned by tests/test_crawl_store.py), so every
-  consumer's oracle is unchanged. The store key folds in (a) an
-  order-insensitive content digest of ``documents`` (count + min/max
-  doc_id + sum/bit_xor of a per-row crc32 over doc_id|source|text),
-  so a regenerated or edited corpus re-materializes, and (b) a hash
-  of the producing code's source (the multimodal + text modules and
-  this module's builders), so editing any extractor invalidates old
-  entries instead of silently serving stale rows (the ADVICE r9
-  staleness class, closed here from day one).
-
-Set ``SPARK_GRAFT_CRAWL_STORE_OFF=1`` to bypass the store (fresh
-per-query extraction — the A side of docs/AB_CRAWL_r10.md);
-``SPARK_GRAFT_CRAWL_STORE`` overrides the store root (default
-``<repo>/out/crawl_store``).
+Each table holds EXACTLY the fresh extraction's rows (pinned by
+tests/test_crawl_store.py). Entries are keyed by (a) an
+order-insensitive content digest of ``documents``, so a regenerated or
+edited corpus re-materializes, and (b) the source of the multimodal +
+text modules and this module's builders, so editing any extractor
+invalidates old entries (the ADVICE r9 staleness class, closed here
+from day one). The band and lm stores key their corpus-derived tables
+by the same ``documents`` fingerprint.
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import os
-import shutil
-import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecmm428_pycart_spark.datapipe import store
 from ecmm428_pycart_spark.session import load_table
 
-_LAYOUT_VERSION = "v1"
 # content fingerprint of the documents table per sf_dir, memoized per
 # process so repeated calls in one gate/bench session pay it once
 _FP_MEMO: dict[str, str] = {}
-_ALGO_MEMO: list[str] = []
 
 
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_CRAWL_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "crawl_store")
+def _algo_sources() -> list[str]:
+    """Everything that determines the stored rows: the whole
+    multimodal module (WARC synth/walk, html extraction, media
+    decoders), the whole text module (outlink_host_edges, html_to_text
+    and their helpers), and this module's fresh builders. Any
+    extractor edit changes the key."""
+    from ecmm428_pycart_spark.datapipe import multimodal
+    from ecmm428_pycart_spark.datapipe import text as text_mod
+
+    return [
+        inspect.getsource(multimodal),
+        inspect.getsource(text_mod),
+        inspect.getsource(_fresh_html),
+        inspect.getsource(_fresh_links),
+        inspect.getsource(_fresh_media),
+    ]
 
 
 def _algo_version() -> str:
-    """Hash of the SOURCE of everything that determines the stored
-    rows: the whole multimodal module (WARC synth/walk, html
-    extraction, media decoders), the whole text module
-    (outlink_host_edges, html_to_text and their helpers), and this
-    module's fresh builders. Any extractor edit changes the key."""
-    if not _ALGO_MEMO:
-        from ecmm428_pycart_spark.datapipe import multimodal
-        from ecmm428_pycart_spark.datapipe import text as text_mod
-
-        src = "\n".join([
-            inspect.getsource(multimodal),
-            inspect.getsource(text_mod),
-            inspect.getsource(_fresh_html),
-            inspect.getsource(_fresh_links),
-            inspect.getsource(_fresh_media),
-        ])
-        _ALGO_MEMO.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO[0]
+    return HTML.code_hash
 
 
 def _fingerprint(spark: SparkSession, sf_dir: str) -> str:
@@ -124,33 +93,15 @@ def _fingerprint(spark: SparkSession, sf_dir: str) -> str:
         return F.when(s.isNull(), F.lit("~")).otherwise(
             F.concat(F.length(s).cast("string"), F.lit(":"), s))
 
-    key = os.path.abspath(sf_dir)
-    if key not in _FP_MEMO:
-        row = (load_table(spark, sf_dir, "documents")
-               .select(F.col("doc_id").cast("long").alias("k"),
-                       F.crc32(F.concat(
-                           _field("doc_id"), _field("source"),
-                           _field("text"))).alias("c"))
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.min("k").alias("lo"),
-                    F.max("k").alias("hi"),
-                    F.sum("c").alias("s"),
-                    F.expr("bit_xor(c)").alias("x")).collect()[0])
-        digest = hashlib.sha256(
-            f"{row['s']}_{row['x']}".encode()).hexdigest()[:10]
-        _FP_MEMO[key] = f"d{row['n']}_{row['lo']}_{row['hi']}_{digest}"
-    return _FP_MEMO[key]
+    return store.fingerprint(_FP_MEMO, sf_dir, "d", lambda: (
+        load_table(spark, sf_dir, "documents")
+        .select(F.col("doc_id").cast("long").alias("k"),
+                F.crc32(F.concat(_field("doc_id"), _field("source"),
+                                 _field("text"))).alias("c"))), digest="c")
 
 
 def _layout_files(spark: SparkSession, sf_dir: str) -> int:
-    """Store-table file count, scaled with corpus size (VERDICT r10
-    next-6): ~one file per 50k docs with a floor of 8, so a sim-sf1+
-    corpus keeps scan parallelism instead of funneling through a
-    fixed 8-file layout, while the small test corpora don't fragment
-    into thousands of tiny files. Derived from the fingerprint's row
-    count (``d<n>_...``), which is already memoized per sf_dir."""
-    n_docs = int(_fingerprint(spark, sf_dir).split("_")[0][1:])
-    return max(8, n_docs // 50_000)
+    return store.layout_files(_fingerprint(spark, sf_dir))
 
 
 def _fresh_html(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,39 +153,17 @@ def _fresh_media(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("s.n_responses").alias("n_responses")))
 
 
-def _served(spark: SparkSession, sf_dir: str, kind: str,
-            fresh: Callable[[SparkSession, str], DataFrame]) -> DataFrame:
-    final = os.path.join(
-        _store_root(),
-        f"{_LAYOUT_VERSION}_{_algo_version()}"
-        f"_{_fingerprint(spark, sf_dir)}_{kind}")
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (fresh(spark, sf_dir)
-             # doc_id-clustered layout, file count scaled with corpus
-             # size: the local stand-in for bucketBy(doc_id) into a
-             # catalog table at cluster scale
-             .repartition(_layout_files(spark, sf_dir), "doc_id")
-             .sortWithinPartitions("doc_id")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's table; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (ADVICE r11)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
+def _doc_clustered(fresh: Callable) -> store.Write:
+    return lambda spark, sf_dir, path: store.write_clustered(
+        fresh(spark, sf_dir), path, _layout_files(spark, sf_dir), "doc_id")
 
 
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_CRAWL_STORE_OFF") == "1"
+HTML, LINKS, MEDIA = (
+    store.declare(name=kind, store="crawl", suffix=kind,
+                  sources=_algo_sources, fingerprint=_fingerprint,
+                  write=_doc_clustered(fresh))
+    for kind, fresh in (("html", _fresh_html), ("links", _fresh_links),
+                        ("media", _fresh_media)))
 
 
 def crawl_html(spark: SparkSession, sf_dir: str,
@@ -245,23 +174,23 @@ def crawl_html(spark: SparkSession, sf_dir: str,
     multi-branch shape when the store is bypassed (q133 fans the
     corpus into audit + filter branches — without the store that pass
     must still run only once)."""
-    if _off():
+    if store.off():
         df = _fresh_html(spark, sf_dir)
         return df.localCheckpoint(eager=True) if checkpoint_if_fresh else df
-    return _served(spark, sf_dir, "html", _fresh_html)
+    return spark.read.parquet(store.served(spark, sf_dir, HTML))
 
 
 def crawl_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extracted outlink edges (doc_id, src_host, dst_host), one
     row per href, from the write-once store."""
-    if _off():
+    if store.off():
         return _fresh_links(spark, sf_dir)
-    return _served(spark, sf_dir, "links", _fresh_links)
+    return spark.read.parquet(store.served(spark, sf_dir, LINKS))
 
 
 def crawl_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decoded media roll-up feed (doc_id, source, media_type,
     n_units, sum_val, n_records, n_responses), from the store."""
-    if _off():
+    if store.off():
         return _fresh_media(spark, sf_dir)
-    return _served(spark, sf_dir, "media", _fresh_media)
+    return spark.read.parquet(store.served(spark, sf_dir, MEDIA))

@@ -1,6 +1,5 @@
-"""Write-once materialized store for the Stupid-Backoff LM count
-tables — the FOURTH derived-dataset store (after ``borders_store``,
-``crawl_store`` and ``band_store``), landing VERDICT r12 next-1.
+"""Write-once store for the Stupid-Backoff LM count tables
+(protocol: ``datapipe/store.py``), landing VERDICT r12 next-1.
 
 The two slowest non-geo registry queries re-run the SAME corpus-linear
 counting pass before doing any of their own work: explode every
@@ -17,9 +16,6 @@ At 100 TB you count the reference corpus ONCE and land the tables as
 columnar data — the count tables are what Brants et al. 2007 actually
 ship between their MapReduce stages — so every scoring run starts from
 a vocabulary-sized scan instead of a corpus-sized explode+shuffle.
-The reference's analogue is ``pycart/border_util.py:51,77``
-(derive-per-call — right for an 852-line single-node library, wrong at
-cluster scale).
 
 Key design points:
 
@@ -35,61 +31,34 @@ Key design points:
   a variant's base corpus must keep calling ``text.bigram_lm_score``
   fresh (d48's even-id reference half stays fresh for this reason —
   its ref is a subset with its own counts).
-
-Store contract (same protocol as ``band_store``/``crawl_store``):
-
-- one entry per (layout version, producing-code hash, corpus
-  fingerprint, variant), variant in {``documents``,
-  ``documents_dedup``}; the producing-code hash folds ``text.tokens``,
-  ``text.adjacent_pairs``, ``text.lm_count_tables`` and this module's
-  builders, and the dedup variant additionally folds
+- One entry per variant, ``documents`` or ``documents_dedup``, keyed by
+  the ``documents`` fingerprint. The producing-code hash folds
+  ``text.tokens``, ``text.adjacent_pairs``, ``text.lm_count_tables``
+  and this module's builders, and the dedup variant additionally folds
   ``dedup.exact_dup_groups`` (the ADVICE r11 staleness lesson — every
   upstream kernel participates in the key, test-pinned).
-- an entry is a directory with two parquet subtables (``uni``/``bg``);
+- An entry is a directory with two parquet subtables (``uni``/``bg``);
   the 1-row ``total`` is NOT stored — it is re-derived at read as an
   ungrouped aggregate over the stored unigram table (a vocabulary-sized
   scan), because the registry-wide plan-shape invariant requires every
   broadcast-nested-loop build side to be PROVABLY tiny from the plan
   itself, and a global Aggregate is provably 1 row where a bare 1-row
   FileScan is not (test_plan_shapes.py's BNLJ allowlist).
-- builds are ATOMIC and race-safe (uuid tmp dir + ``os.rename``; a
-  lost race cleans up and reads the winner; non-OSError build failures
-  also clean the tmp dir).
-
-Set ``SPARK_GRAFT_LM_STORE_OFF=1`` to bypass the store (fresh
-per-query counting — the A side of tools/ab_lm_store.py);
-``SPARK_GRAFT_LM_STORE`` overrides the store root (default
-``<repo>/out/lm_store``).
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
 import os
-import shutil
-import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecmm428_pycart_spark.datapipe import crawl_store, dedup, text
+from ecmm428_pycart_spark.datapipe import crawl_store, dedup, store, text
 from ecmm428_pycart_spark.session import load_table
 
-_LAYOUT_VERSION = "v1"
-_ALGO_MEMO: dict = {}
-
 _VARIANTS = ("documents", "documents_dedup")
-_SUBTABLES = ("uni", "bg")
-
-
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_LM_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "lm_store")
 
 
 def _algo_sources(variant: str) -> list[str]:
@@ -112,11 +81,7 @@ def _algo_sources(variant: str) -> list[str]:
 
 
 def _algo_version(variant: str) -> str:
-    if variant not in _ALGO_MEMO:
-        src = "\n".join(_algo_sources(variant))
-        _ALGO_MEMO[variant] = hashlib.sha256(
-            src.encode()).hexdigest()[:12]
-    return _ALGO_MEMO[variant]
+    return _TABLES[variant].code_hash
 
 
 def _base_corpus(spark: SparkSession, sf_dir: str,
@@ -138,13 +103,30 @@ def _fresh_counts(spark: SparkSession, sf_dir: str, variant: str
     return text.lm_count_tables(_base_corpus(spark, sf_dir, variant))
 
 
+def _write_counts(spark: SparkSession, sf_dir: str, path: str,
+                  variant: str) -> None:
+    uni, bg, _ = _fresh_counts(spark, sf_dir, variant)
+    # vocabulary-sized tables: the unigram table in a handful of
+    # files, the vocab²-bounded bigram table w1-clustered with
+    # corpus-scaled file count (the score join shuffles on (w1, w2),
+    # so w1-clustering keeps each scan partition join-local on the hot
+    # key prefix)
+    n_files = crawl_store._layout_files(spark, sf_dir)
+    store.write_clustered(uni, os.path.join(path, "uni"),
+                          max(2, n_files // 4), "w")
+    store.write_clustered(bg, os.path.join(path, "bg"), n_files, "w1", "w2")
+
+
+_TABLES = {
+    v: store.declare(name=v, store="lm", suffix=f"lm_{v}",
+                     sources=partial(_algo_sources, v),
+                     fingerprint=crawl_store._fingerprint,
+                     write=partial(_write_counts, variant=v))
+    for v in _VARIANTS}
+
+
 def _entry_key(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    return (f"{_LAYOUT_VERSION}_{_algo_version(variant)}"
-            f"_{crawl_store._fingerprint(spark, sf_dir)}_lm_{variant}")
-
-
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_LM_STORE_OFF") == "1"
+    return _TABLES[variant].entry(spark, sf_dir)
 
 
 def count_tables(spark: SparkSession, sf_dir: str,
@@ -156,7 +138,7 @@ def count_tables(spark: SparkSession, sf_dir: str,
     fresh (exact-long counts, bit-for-bit scores downstream).
 
     ``fresh_ref`` is only consulted on the bypass path
-    (``SPARK_GRAFT_LM_STORE_OFF=1``): a consumer that already holds a
+    (``SPARK_GRAFT_STORE_OFF=1``): a consumer that already holds a
     materialized copy of the variant's corpus (q95's checkpointed
     deduped corpus) passes it so the A/B's fresh arm reproduces
     EXACTLY the pre-store plan instead of re-deriving the corpus.
@@ -167,40 +149,11 @@ def count_tables(spark: SparkSession, sf_dir: str,
     if variant not in _VARIANTS:
         raise ValueError(f"unknown lm-store variant {variant!r}; "
                          f"expected one of {_VARIANTS}")
-    if _off():
+    if store.off():
         if fresh_ref is not None:
             return text.lm_count_tables(fresh_ref)
         return _fresh_counts(spark, sf_dir, variant)
-    final = os.path.join(_store_root(), _entry_key(spark, sf_dir, variant))
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            uni, bg, _ = _fresh_counts(spark, sf_dir, variant)
-            # vocabulary-sized tables: the unigram table in a handful
-            # of files, the vocab²-bounded bigram table w1-clustered
-            # with corpus-scaled file count (the local stand-in for
-            # bucketBy(w1) into a catalog table at cluster scale — the
-            # score join shuffles on (w1, w2), so w1-clustering keeps
-            # each scan partition join-local on the hot key prefix)
-            n_files = crawl_store._layout_files(spark, sf_dir)
-            (uni.repartition(max(2, n_files // 4), "w")
-             .sortWithinPartitions("w")
-             .write.mode("overwrite").parquet(os.path.join(tmp, "uni")))
-            (bg.repartition(n_files, "w1")
-             .sortWithinPartitions("w1", "w2")
-             .write.mode("overwrite").parquet(os.path.join(tmp, "bg")))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's tables; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (the ADVICE r11 class)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+    final = store.served(spark, sf_dir, _TABLES[variant])
     uni = spark.read.parquet(os.path.join(final, "uni"))
     bg = spark.read.parquet(os.path.join(final, "bg"))
     # total re-derived, not read: a global Aggregate is provably 1 row

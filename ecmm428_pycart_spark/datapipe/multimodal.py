@@ -561,6 +561,10 @@ def _decode_png_inner(b: bytes) -> np.ndarray:
         plane, end = _png_unfilter(raw, 0, width, height, bpp)
         out = _png_assemble(plane, height, width, ch, sbytes)
     else:
+        # the passes hold every pixel exactly once, so a header
+        # declaring more bytes than IDAT inflated to is corrupt
+        if width * height * bpp > len(raw):
+            raise ValueError("IDAT length does not match dimensions")
         out = np.zeros((height, width, ch), dtype=dtype)
         pos = 0
         for (x0, y0, dx, dy) in _ADAM7:
@@ -1436,6 +1440,10 @@ def _decode_jpeg_gray_inner(data: bytes) -> np.ndarray:
     bh_blocks = (height + 7) // 8
     q = qt[comp_q]
     dct, act = huff[(0, comp_dc)], huff[(1, comp_ac)]
+    # every block costs at least 2 entropy bits (a DC and an EOB
+    # code), so the scan bounds the block count the header may declare
+    if bh_blocks * bw_blocks > 4 * (len(data) - pos):
+        raise ValueError("JPEG dimensions exceed what the scan encodes")
     br = _BitReader(data, pos)
     out = np.zeros((bh_blocks * 8, bw_blocks * 8), dtype=np.uint8)
     prev_dc = 0
@@ -1714,6 +1722,10 @@ def _decode_jpeg_color_inner(data: bytes):
         raise ValueError("only 3-component 4:2:0 supported")
     if height % 16 or width % 16:
         raise ValueError("dimensions must be multiples of 16")
+    # 6 blocks per 16x16 MCU, each at least 2 entropy bits (see
+    # _decode_jpeg_gray_inner): the scan bounds the declared size
+    if 3 * height * width // 128 > 4 * (len(data) - pos):
+        raise ValueError("JPEG dimensions exceed what the scan encodes")
 
     inv_zz = np.empty(64, dtype=np.int64)
     inv_zz[_ZIGZAG] = np.arange(64)
@@ -3239,6 +3251,12 @@ def _decode_qoi_inner(b: bytes) -> np.ndarray:
     if channels not in (3, 4):
         raise ValueError(f"unsupported QOI channel count {channels}")
     n = w * h
+    # one op byte between the header and the end marker yields at most
+    # 62 pixels (a maximal run): a larger declared size is a corrupt
+    # header, refused before it sizes the allocation
+    if n > 62 * max(0, len(b) - 14 - len(_QOI_END)):
+        raise ValueError(f"corrupt QOI: header declares {n} pixels, more "
+                         f"than {len(b)} bytes can encode")
     out = np.empty((n, 3), np.uint8)
     index = [(0, 0, 0, 0)] * 64
     px = (0, 0, 0, 255)
@@ -3891,6 +3909,11 @@ def decode_tga_pixels(buf: bytes):
      desc) = struct.unpack("<BBBHHBHHHHBB", buf[:18])
     if idl != 0 or cmt != 0 or ityp != 10 or bpp != 24:
         raise ValueError("tga: unsupported variant")
+    # a 4-byte RLE packet carries at most 128 pixels: the packet
+    # stream bounds the pixel count the header may declare
+    if w * h > 32 * (len(buf) - 18):
+        raise ValueError("tga: header declares more pixels than the "
+                         "packet stream encodes")
     px = np.zeros((h, w, 3), np.uint8)
     pos, n_rle, n_raw = 18, 0, 0
     for y in range(h):

@@ -33,8 +33,8 @@ def _rows(df):
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "band_store")
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_BAND_STORE_OFF", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
     return root
 
 
@@ -114,8 +114,7 @@ def test_crawl_html_variant_equals_fresh_subset(spark, store_root,
     from ecmm428_pycart_spark.datapipe import band_store as bs
     from ecmm428_pycart_spark.datapipe import crawl_store, dedup
 
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE",
-                       str(tmp_path / "crawl_store"))
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
     corpus = crawl_store.crawl_html(spark, TESTDATA)
     subset = corpus.filter((F.col("doc_id") % 2) == 0)
     served = _rows(bs.candidate_pairs(spark, TESTDATA, docs=subset,
@@ -127,8 +126,8 @@ def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
     from ecmm428_pycart_spark.datapipe import band_store as bs
 
     root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE_OFF", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", root)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
     assert bs.band_index(spark, TESTDATA).count() > 0
     assert bs.candidate_pairs(spark, TESTDATA).count() >= 0
     assert not os.path.exists(root)
@@ -192,13 +191,12 @@ def test_consumers_store_equals_fresh(spark, store_root, tmp_path,
     rows with the store serving and with it bypassed."""
     from ecmm428_pycart_spark.benchmarks import get_queries
 
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE",
-                       str(tmp_path / "crawl_store"))
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
     qs = get_queries()
     for name in ("d15_dup_clusters", "q133_crawl_pipeline"):
-        monkeypatch.delenv("SPARK_GRAFT_BAND_STORE_OFF", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
         with_store = _rows(qs[name](spark, TESTDATA))
-        monkeypatch.setenv("SPARK_GRAFT_BAND_STORE_OFF", "1")
+        monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
         fresh = _rows(qs[name](spark, TESTDATA))
         assert with_store == fresh, name
 
@@ -261,7 +259,7 @@ def test_failed_build_cleans_tmp_dir(spark, store_root, monkeypatch):
         seen["tmp_existed"] = os_mod.path.isdir(src)
         raise RuntimeError("injected post-write failure")
 
-    monkeypatch.setattr(band_store.os, "rename", boom)
+    monkeypatch.setattr(os_mod, "rename", boom)
     with pytest.raises(RuntimeError, match="injected"):
         band_store.band_index(spark, TESTDATA)
     assert seen.get("tmp_existed"), "injection fired before the write"

@@ -25,8 +25,8 @@ def _rowset(df):
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "borders_store")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_BORDERS_STORE_OFF", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
     return root
 
 
@@ -47,8 +47,8 @@ def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
     from ecmm428_pycart_spark.datapipe import borders_store as bs
 
     root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE_OFF", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", root)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
     df = bs.customer_borders(spark, TESTDATA)
     assert df.count() > 0
     assert not os.path.exists(root)
@@ -109,11 +109,11 @@ def test_two_process_build_race(tmp_path):
     import subprocess
     import sys as _sys
 
-    root = str(tmp_path / "race_store")
+    root = str(tmp_path / "borders_store")
     prog = f"""
 import os
-os.environ["SPARK_GRAFT_BORDERS_STORE"] = {root!r}
-os.environ.pop("SPARK_GRAFT_BORDERS_STORE_OFF", None)
+os.environ["SPARK_GRAFT_STORE_ROOT"] = {str(tmp_path)!r}
+os.environ.pop("SPARK_GRAFT_STORE_OFF", None)
 import sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
@@ -152,8 +152,8 @@ def test_orders_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
     from ecmm428_pycart_spark.datapipe import borders_store as bs
 
     root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE_OFF", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", root)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
     df = bs.orders2500_borders(spark, TESTDATA)
     assert df.count() > 0
     assert not os.path.exists(root)

@@ -23,8 +23,8 @@ def _rows(df):
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "crawl_store")
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_CRAWL_STORE_OFF", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
     return root
 
 
@@ -48,8 +48,8 @@ def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
 
     root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE_OFF", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", root)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
     assert cs.crawl_html(spark, TESTDATA).count() > 0
     assert cs.crawl_links(spark, TESTDATA).count() > 0
     assert cs.crawl_media(spark, TESTDATA).count() > 0
@@ -92,9 +92,9 @@ def test_consumers_store_equals_fresh(spark, store_root, monkeypatch):
 
     qs = get_queries()
     for name in ("q133_crawl_pipeline", "g41_host_pagerank"):
-        monkeypatch.delenv("SPARK_GRAFT_CRAWL_STORE_OFF", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
         with_store = _rows(qs[name](spark, TESTDATA))
-        monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE_OFF", "1")
+        monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
         fresh = _rows(qs[name](spark, TESTDATA))
         assert with_store == fresh, name
 
@@ -117,11 +117,11 @@ def test_two_process_build_race(tmp_path):
     import subprocess
     import sys as _sys
 
-    root = str(tmp_path / "race_store")
+    root = str(tmp_path / "crawl_store")
     prog = f"""
 import os
-os.environ["SPARK_GRAFT_CRAWL_STORE"] = {root!r}
-os.environ.pop("SPARK_GRAFT_CRAWL_STORE_OFF", None)
+os.environ["SPARK_GRAFT_STORE_ROOT"] = {str(tmp_path)!r}
+os.environ.pop("SPARK_GRAFT_STORE_OFF", None)
 import sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")

@@ -40,8 +40,8 @@ def _counts_rows(counts):
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "lm_store")
-    monkeypatch.setenv("SPARK_GRAFT_LM_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_LM_STORE_OFF", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    monkeypatch.delenv("SPARK_GRAFT_STORE_OFF", raising=False)
     return root
 
 
@@ -105,7 +105,7 @@ def test_bypass_env_fresh_paths(spark, store_root, monkeypatch):
     from ecmm428_pycart_spark.datapipe import lm_store as ls
     from ecmm428_pycart_spark.session import load_table
 
-    monkeypatch.setenv("SPARK_GRAFT_LM_STORE_OFF", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_OFF", "1")
     want = _counts_rows(ls._fresh_counts(spark, TESTDATA, "documents"))
     # without fresh_ref: derives the variant corpus itself
     assert _counts_rows(ls.count_tables(

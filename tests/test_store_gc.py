@@ -23,50 +23,43 @@ def test_gc_keeps_live_prefixes_and_removes_orphans(tmp_path):
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
     from ecmm428_pycart_spark.datapipe import lm_store as ls
 
-    roots = {"SPARK_GRAFT_BORDERS_STORE": tmp_path / "borders",
-             "SPARK_GRAFT_CRAWL_STORE": tmp_path / "crawl",
-             "SPARK_GRAFT_BAND_STORE": tmp_path / "band",
-             "SPARK_GRAFT_LM_STORE": tmp_path / "lm"}
+    roots = {s: tmp_path / f"{s}_store"
+             for s in ("borders", "crawl", "band", "lm")}
     for r in roots.values():
         r.mkdir()
 
+    band_hash = bs._TABLES["documents"].code_hash
     live = [
-        roots["SPARK_GRAFT_BORDERS_STORE"]
-        / f"{obs._LAYOUT_VERSION}_{obs._algo_version()}_c9_0_8_ffff",
-        roots["SPARK_GRAFT_CRAWL_STORE"]
-        / f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_d9_0_8_eeee_html",
-        roots["SPARK_GRAFT_BAND_STORE"]
-        / f"{bs._LAYOUT_VERSION}_{bs._algo_version()}_d9_0_8_dddd"
-          f"_bands_documents",
-        roots["SPARK_GRAFT_BAND_STORE"]
-        / f"{bs._LAYOUT_VERSION}_{bs._algo_version()}"
-          f"-c{cs._algo_version()}_d9_0_8_dddd_bands_crawl_html",
-        roots["SPARK_GRAFT_LM_STORE"]
-        / f"{ls._LAYOUT_VERSION}_{ls._algo_version('documents')}"
-          f"_d9_0_8_cccc_lm_documents",
-        roots["SPARK_GRAFT_LM_STORE"]
-        / f"{ls._LAYOUT_VERSION}_{ls._algo_version('documents_dedup')}"
-          f"_d9_0_8_cccc_lm_documents_dedup",
+        roots["borders"] / f"{obs.CUSTOMER.prefix}c9_0_8_ffff",
+        # the orders grid's table: the hand-kept prefix list this tool
+        # had before the store declarations missed it
+        roots["borders"] / f"{obs.ORDERS.prefix}o1500_0_2499_abcd",
+        roots["crawl"] / f"{cs.HTML.prefix}d9_0_8_eeee_html",
+        roots["band"] / f"v1_{band_hash}_d9_0_8_dddd_bands_documents",
+        roots["band"] / f"v1_{band_hash}-c{cs._algo_version()}"
+                        f"_d9_0_8_dddd_bands_crawl_html",
+        roots["lm"] / f"v1_{ls._algo_version('documents')}"
+                      f"_d9_0_8_cccc_lm_documents",
+        roots["lm"] / f"v1_{ls._algo_version('documents_dedup')}"
+                      f"_d9_0_8_cccc_lm_documents_dedup",
     ]
     dead = [
-        roots["SPARK_GRAFT_BORDERS_STORE"] / "v1_c9_0_8",  # pre-r10 format
-        roots["SPARK_GRAFT_CRAWL_STORE"] / "v1_000000000000_d9_0_8_x_html",
-        roots["SPARK_GRAFT_BAND_STORE"] / "v0_stale_d9_0_8_x_bands_documents",
-        roots["SPARK_GRAFT_LM_STORE"] / "v1_000000000000_d9_0_8_x_lm_documents",
+        roots["borders"] / "v1_c9_0_8",  # pre-r10 format
+        roots["crawl"] / "v1_000000000000_d9_0_8_x_html",
+        roots["band"] / "v0_stale_d9_0_8_x_bands_documents",
+        roots["lm"] / "v1_000000000000_d9_0_8_x_lm_documents",
     ]
-    tmpd = roots["SPARK_GRAFT_CRAWL_STORE"] / (
-        f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_d9_0_8_eeee_html"
-        ".tmp.abc123")
+    tmpd = roots["crawl"] / f"{cs.HTML.prefix}d9_0_8_eeee_html.tmp.abc123"
     for d in [*live, *dead, tmpd]:
         d.mkdir()
         (d / "part-0.parquet").write_bytes(b"x")
 
-    env = {**os.environ,
-           **{k: str(v) for k, v in roots.items()}}
+    env = {**os.environ, "SPARK_GRAFT_STORE_ROOT": str(tmp_path)}
 
     out = _run(env=env).stdout              # dry-run: nothing deleted
     assert all(d.exists() for d in [*live, *dead, tmpd])
-    assert out.count("DEAD") == len(dead) and "6 live" in out
+    assert out.count("DEAD") == len(dead), out
+    assert f"{len(live)} live" in out
 
     _run("--apply", env=env)                # orphans go, tmp stays
     assert all(d.exists() for d in live) and tmpd.exists()

@@ -98,7 +98,7 @@ def time_base_vs_scratch(spark, names: list[str], base: str, scratch: str,
                          samples: int, skip_base: bool = False,
                          warm: str = "q01_pricing_summary") -> dict:
     """Shared decade-up measurement loop (also used by
-    neardup_corpus.py and crawl_decade.py): each query `samples` times
+    neardup_corpus.py): each query `samples` times
     at both dirs in one warmed session, cache cleared between runs,
     min/median/max + the decade slope log10(median ratio) per entry.
     ``warm`` must be a query whose tables exist at ``base`` —

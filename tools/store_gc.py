@@ -1,23 +1,23 @@
 """Garbage-collect orphaned derived-dataset store entries.
 
-The four write-once stores (borders / crawl / band / lm) key every entry
-by layout version + producing-code source hash (+ corpus content
-fingerprint), so editing a producer or hardening a fingerprint
-orphans the old entries: they can never be SERVED again (the key no
-longer matches), but they sit on disk forever — e.g. the round-10
-borders key-format change and the round-11 fingerprint hardening each
-left a generation of unreachable directories behind.
+Every store entry is named by layout version + producing-code source
+hash + input fingerprint (``datapipe/store.py``), so editing a producer
+or hardening a fingerprint orphans the old entries: they can never be
+SERVED again (the name no longer matches), but they sit on disk
+forever — e.g. the round-10 borders key-format change and the round-11
+fingerprint hardening each left a generation of unreachable
+directories behind.
 
-An entry is LIVE iff the current module could construct its name for
-SOME corpus: it starts with the module's current
-``{layout}_{algo-hash}`` prefix (for the band store's crawl_html
-variant, ``{layout}_{algo}-c{crawl-algo}``). Entries with live
-prefixes but unfamiliar fingerprints are KEPT — other sf_dirs /
-scratch corpora are legitimately different fingerprints. ``.tmp.``
-directories are in-flight builds; they are removed only with
-``--tmp-too`` (safe on a quiescent host, not while a build races).
+An entry is LIVE iff some declared table (``store.declared()``) could
+construct its name for SOME input: it starts with that table's current
+``{layout}_{code-hash}_`` prefix. Entries with live prefixes but
+unfamiliar fingerprints are KEPT — other sf_dirs / scratch corpora are
+legitimately different fingerprints. ``.tmp.`` directories are
+in-flight builds; they are removed only with ``--tmp-too`` (safe on a
+quiescent host, not while a build races).
 
-Dry-run by default; pass ``--apply`` to delete.
+Dry-run by default; pass ``--apply`` to delete. The root is
+``SPARK_GRAFT_STORE_ROOT`` (default ``<repo>/out``), as for the stores.
 
 Usage: python tools/store_gc.py [--apply] [--tmp-too]
 """
@@ -32,28 +32,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def live_prefixes() -> dict[str, list[str]]:
-    """Store root → the entry-name prefixes the CURRENT code serves."""
-    from ecmm428_pycart_spark.datapipe import band_store as bs
-    from ecmm428_pycart_spark.datapipe import borders_store as os_
-    from ecmm428_pycart_spark.datapipe import crawl_store as cs
-    from ecmm428_pycart_spark.datapipe import lm_store as ls
+def live_prefixes() -> dict[str, set[str]]:
+    """Store directory → the entry-name prefixes the CURRENT code serves."""
+    from ecmm428_pycart_spark.datapipe import store
 
-    band_doc = f"{bs._LAYOUT_VERSION}_{bs._algo_version()}_"
-    band_html = (f"{bs._LAYOUT_VERSION}_{bs._algo_version()}"
-                 f"-c{cs._algo_version()}_")
-    return {
-        os_._store_root(): [
-            f"{os_._LAYOUT_VERSION}_{os_._algo_version()}_"],
-        cs._store_root(): [
-            f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_"],
-        bs._store_root(): [band_doc, band_html],
-        # the lm store's algo hash is per-variant (the dedup variant
-        # folds exact_dup_groups), so each variant has its own prefix
-        ls._store_root(): [
-            f"{ls._LAYOUT_VERSION}_{ls._algo_version(v)}_"
-            for v in ls._VARIANTS],
-    }
+    live: dict[str, set[str]] = {}
+    for table in store.declared():
+        live.setdefault(table.directory, set()).add(table.prefix)
+    return live
 
 
 def main() -> None:
