@@ -17,9 +17,25 @@ re-expresses its capabilities Spark-first:
 - ``streaming``  — Structured Streaming variants of the event pipeline.
 """
 
-from ecmm428_pycart_spark.session import get_spark
-from ecmm428_pycart_spark.plans.cartogram import Cartogram
-from ecmm428_pycart_spark.operators.borders import get_borders
+import importlib
 
 __all__ = ["get_spark", "Cartogram", "get_borders"]
 __version__ = "0.1.0"
+
+# The exports are resolved on first access (PEP 562), so importing the
+# package does not import pyspark: the worker daemon
+# (``python -m ecmm428_pycart_spark.pyworker``) runs this file before it
+# has chosen where pyspark is imported from.
+_EXPORTS = {
+    "get_spark": "ecmm428_pycart_spark.session",
+    "Cartogram": "ecmm428_pycart_spark.plans.cartogram",
+    "get_borders": "ecmm428_pycart_spark.operators.borders",
+}
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value

@@ -193,10 +193,25 @@ class Cartogram:
             F.sum(F.sqrt(F.col("_fv") / math.pi)
                   + F.sqrt(F.col("_nv") / math.pi)).alias("total_radius"),
         )
+        # the input contract rides on the same collect: radius =
+        # sqrt(value / pi) is NaN for a negative, null or NaN value
+        value = F.col("_value").cast("double")
         stats = regions.agg(
             F.max(F.sqrt(F.col("_value") / math.pi)).alias("_maxur"),
-            F.count(F.lit(1)).alias("_n"))
+            F.count(F.lit(1)).alias("_n"),
+            F.min(value).alias("_minv"),
+            F.count_if(value.isNull() | F.isnan(value)).alias("_nulls"))
         row = sums.crossJoin(stats).collect()[0]
+        if row["_n"] == 0:
+            raise ValueError("dorling: the input frame has no regions")
+        if row["_nulls"]:
+            raise ValueError(
+                f"dorling: {row['_nulls']} region(s) have a null or NaN "
+                f"{v!r}; a circle radius needs a value >= 0")
+        if row["_minv"] < 0:
+            raise ValueError(
+                f"dorling: negative {v!r} (min {row['_minv']}); a circle "
+                f"radius sqrt(value / pi) needs a value >= 0")
         if row["total_radius"] is None or float(row["total_radius"]) == 0.0:
             # no Queen edges at all (single region / all islands): the
             # reference divides by zero here (cartogram.py:335); fail fast

@@ -15,6 +15,23 @@ def get_spark(app_name: str = "ecmm428_pycart_spark",
     Local mode is a single JVM; on a real cluster the same settings apply
     per-executor. AQE is on so shuffle partition counts re-plan at runtime
     (the 100 TB path relies on AQE coalescing + skew-join handling).
+
+    Python workers start through ``spark.python.daemon.module =
+    ecmm428_pycart_spark.pyworker``, which imports pyspark from the
+    installed package instead of ``$SPARK_HOME/python/lib/pyspark.zip``.
+    pyspark calls ``importlib.invalidate_caches()`` at the start of every
+    Python task, and on CPython 3.11 each zipimporter then re-reads its
+    archive's whole central directory: a reused worker holds 16 of them
+    (pyspark.zip subpackages, the py4j zip, the spark-core jar), 26,672
+    entries re-read for 130-650 ms per task on a 4-vCPU VM. With the
+    daemon module there are 0 and the call takes ~0.1 ms. The daemon
+    module is set only when workers can import this package (the working
+    directory or ``PYTHONPATH`` holds it); pyworker.py keeps the archives
+    unless the installed pyspark is the same version. Sessions not built
+    here keep the archives and pay the per-task re-read: a plain session
+    handed to ``__spark_entry__.entry``, ``tools/verify_oracle.py
+    --plain``, ``tools/probe_calib.py`` and the store race-test
+    subprocesses.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -32,9 +49,21 @@ def get_spark(app_name: str = "ecmm428_pycart_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
+    if _workers_import_package():
+        builder = builder.config("spark.python.daemon.module",
+                                 "ecmm428_pycart_spark.pyworker")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _workers_import_package() -> bool:
+    """Whether Python workers can import this package: in local mode the
+    worker daemon runs ``python -m`` in this process's working directory
+    with its ``PYTHONPATH``."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return root in {os.path.realpath(d) for d in dirs if d}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

@@ -263,6 +263,31 @@ def test_dorling_all_islands_fails_fast(spark):
         cart.dorling(iterations=1)
 
 
+@pytest.mark.parametrize("bad, match", [
+    (-5.0, "negative 'Population'"),
+    (None, "null or NaN 'Population'"),
+    (float("nan"), "null or NaN 'Population'"),
+])
+def test_dorling_rejects_values_without_a_radius(spark, squares_df, bad,
+                                                 match):
+    """sqrt(value / pi) has no real radius for these values; the setup
+    raises instead of returning NaN circles."""
+    df = squares_df.withColumn(
+        "Population",
+        F.when(F.col("name") == "TR", F.lit(bad).cast("double"))
+        .otherwise(F.col("Population")))
+    cart = Cartogram(df, "Population", "name", idx_field="region_idx")
+    with pytest.raises(ValueError, match=match):
+        cart.dorling(iterations=1)
+
+
+def test_dorling_empty_frame_has_its_own_error(spark, squares_df):
+    cart = Cartogram(squares_df.limit(0), "Population", "name",
+                     idx_field="region_idx")
+    with pytest.raises(ValueError, match="no regions"):
+        cart.dorling(iterations=1)
+
+
 def test_dorling_friction_scales_first_step(spark, squares_df):
     """velocity = friction × total force (pycart/cartogram.py:397):
     from identical start positions, one iteration's displacement is
